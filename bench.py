@@ -15,8 +15,8 @@ on local[$SPARK_GRAFT_CPUS]:
 
 Modes:
     python bench.py                 # one JSON line (driver contract)
-    python bench.py --scaling       # run extract_corpus at local[8] and
-                                    # local[32] in fresh JVMs, print
+    python bench.py --scaling       # run tools/scaling_job.py at local[8]
+                                    # and local[32] in fresh JVMs, print
                                     # throughput@8, @32, efficiency
 """
 
@@ -256,97 +256,23 @@ def main() -> None:
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    if "--scaling-child" in sys.argv:
-        # One fresh-JVM extraction run at $SPARK_GRAFT_CPUS over a
-        # MATERIALIZED corpus parquet (written once, untimed): the
-        # north metric is docs/sec extraction over a stored table, and
-        # inline generation would compete with the extraction UDF for
-        # Python workers.
-        #
-        # Measurement discipline (the host has EXTERNAL load bursts):
-        # every rep is (a) load-gated — we wait for /proc/loadavg to
-        # drop below $SPARK_GRAFT_LOAD_GATE before starting, (b)
-        # CPU-accounted — we record our own process-tree CPU seconds
-        # (JVM + forked Python workers, via /proc session-id match,
-        # so Arrow-UDF Python time is included) AND host-wide busy CPU
-        # seconds (/proc/stat delta). host_minus_ours_cpu_s is CPU
-        # burned by neighbours DURING the rep; cpu_s per doc flat
-        # across core counts while wall inflates = the plan scales and
-        # the residual is contention. Per-stage JVM run/cpu time comes
-        # from the UI REST API for the same rep.
-        from ocr_service_spark.bench_probe import (
-            host_cpu_seconds,
-            loadavg1,
-            session_tree_cpu_seconds,
-            stage_metrics,
-            wait_for_quiet,
-        )
-        from ocr_service_spark.corpus import ensure_bench_corpus
-        from ocr_service_spark.pipeline import process_documents
-        from ocr_service_spark.session import build_session
-
-        n_corpus = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "120000"))
-        reps = int(os.environ.get("SPARK_GRAFT_CHILD_REPS", "2"))
-        ui_port = int(os.environ.get("SPARK_GRAFT_UI_PORT", "4048"))
-        corpus_path = os.environ.get(
-            "SPARK_GRAFT_BENCH_CORPUS",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".bench", f"corpus_{n_corpus}.parquet"))
-        spark = build_session(
-            "bench_scaling", cores=cores, shuffle_partitions=max(cores, 8),
-            extra_conf={"spark.ui.enabled": "true",
-                        "spark.ui.port": str(ui_port)})
-        ensure_bench_corpus(spark, corpus_path, n_corpus)
-        docs = spark.read.parquet(corpus_path)
-        docs.count()  # warm JVM + page cache
-        runs = []
-        seen_stages: set[int] = set()
-        for _ in range(reps):
-            waited = wait_for_quiet()
-            load0 = loadavg1()
-            cpu0, host0 = session_tree_cpu_seconds(), host_cpu_seconds()
-            t0 = time.time()
-            process_documents(docs).count()
-            wall = time.time() - t0
-            ours = round(session_tree_cpu_seconds() - cpu0, 1)
-            host = round(host_cpu_seconds() - host0, 1)
-            stages, seen_stages = stage_metrics(spark, ui_port, seen_stages)
-            runs.append({
-                "sec": round(wall, 3),
-                "load_before": load0,
-                "load_after": loadavg1(),
-                "gate_wait_s": waited,
-                "ours_cpu_s": ours,
-                "host_cpu_s": host,
-                # host-wide busy minus our tree: >0 under external load.
-                # Can go slightly NEGATIVE (a few %) because /proc/stat
-                # is tick-sampled while per-process time is precise —
-                # treat near-zero as "host was ours alone".
-                "host_minus_ours_cpu_s": round(host - ours, 1),
-                "stages": stages,
-            })
-        best = min(runs, key=lambda r: r["sec"])
-        print(json.dumps({"corpus_docs_per_sec": round(n_corpus / best["sec"], 1),
-                          "cores": cores, "sec": best["sec"],
-                          "best": best, "runs": runs}))
-        return
-
     if "--scaling" in sys.argv:
-        # Two-cluster-size proxy: the same job in fresh JVMs at N and 4N
-        # cores. The sandbox host has external load bursts, so the runs
-        # are INTERLEAVED over several rounds, every rep inside a child
-        # is load-gated and CPU-accounted (see --scaling-child), and the
-        # best per config wins — a burst then penalizes both configs
-        # equally AND shows up in the rep's external_cpu_s.
+        # Two-cluster-size proxy: the same job (tools/scaling_job.py) in
+        # fresh JVMs at N and 4N cores. The sandbox host has external
+        # load bursts, so the runs are INTERLEAVED over several rounds,
+        # every rep inside a child is load-gated and CPU-accounted, and
+        # the best per config wins — a burst then penalizes both configs
+        # equally AND shows up in the rep's host_minus_ours_cpu_s.
         rounds = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "3"))
         pair = os.environ.get("SPARK_GRAFT_SCALE_PAIR", "8,32")
         n_small, n_big = (int(x) for x in pair.split(","))
-        n_corpus = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "120000"))
         repo = os.path.dirname(os.path.abspath(__file__))
+        job = os.path.join(repo, "tools", "scaling_job.py")
         # SPARK_GRAFT_SUBMIT=1 → launch each child via the north rule's
         # deployment contract: spark-submit --py-files <package zip>
-        # tools/scaling_job.py (imports resolve from the zip; the same
-        # command line runs unchanged on a yarn/k8s cluster).
+        # (imports resolve from the zip; the same command line runs
+        # unchanged on a yarn/k8s cluster). Otherwise plain Python with
+        # the checkout on PYTHONPATH.
         submit = os.environ.get("SPARK_GRAFT_SUBMIT") == "1"
         if submit:
             sys.path.insert(0, os.path.join(repo, "tools"))
@@ -365,11 +291,11 @@ def main() -> None:
                     cmd = ["spark-submit", "--master", f"local[{c}]",
                            "--driver-memory",
                            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-                           "--py-files", zip_path,
-                           os.path.join(repo, "tools", "scaling_job.py")]
+                           "--py-files", zip_path, job]
                 else:
-                    cmd = [sys.executable, os.path.abspath(__file__),
-                           "--scaling-child"]
+                    cmd = [sys.executable, job]
+                    env["PYTHONPATH"] = os.pathsep.join(
+                        p for p in (repo, os.environ.get("PYTHONPATH")) if p)
                 out = subprocess.run(
                     cmd, env=env, capture_output=True, text=True)
                 if out.returncode != 0:
@@ -396,19 +322,11 @@ def main() -> None:
         # tree (JVM + Python workers), best rep per config. ~1.0 here
         # while wall efficiency lags = the PLAN scales (same work per
         # doc at both widths); the wall gap is host contention, visible
-        # in external_cpu_s.
+        # in host_minus_ours_cpu_s.
         bs, bb = best[n_small].get("best"), best[n_big].get("best")
         if bs and bb and bs.get("ours_cpu_s") and bb.get("ours_cpu_s"):
-            # per-child doc count derived from the child's own output
-            # (docs/s * sec), NOT this process's n_corpus: the
-            # spark-submit child (tools/scaling_job.py) defaults
-            # SPARK_GRAFT_BENCH_DOCS to 240000 while this parent
-            # defaults to 120000, which silently doubled cpu_s_per_kdoc
-            # whenever the env var was unset.
-            n_small_docs = best[n_small]["corpus_docs_per_sec"] * best[n_small]["sec"]
-            n_big_docs = best[n_big]["corpus_docs_per_sec"] * best[n_big]["sec"]
-            cpu_small = bs["ours_cpu_s"] / n_small_docs
-            cpu_big = bb["ours_cpu_s"] / n_big_docs
+            cpu_small = bs["ours_cpu_s"] / best[n_small]["docs"]
+            cpu_big = bb["ours_cpu_s"] / best[n_big]["docs"]
             result["cpu_s_per_kdoc"] = {str(n_small): round(cpu_small * 1000, 3),
                                         str(n_big): round(cpu_big * 1000, 3)}
             result["cpu_time_efficiency"] = round(cpu_small / cpu_big, 3)

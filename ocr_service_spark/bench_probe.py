@@ -10,7 +10,7 @@ time is counted — or (b) the rest of the host. A rep whose per-doc
 `ours_cpu_s` is flat across core counts while wall inflates is
 plan-scaling evidence; the residual is the neighbours' CPU, visible in
 `host_minus_ours_cpu_s` (tick-sampling skew makes it noisy within a
-few percent — see bench.py --scaling-child).
+few percent — see tools/scaling_job.py).
 """
 
 from __future__ import annotations

@@ -10,7 +10,7 @@ from 100 pytest docs to bench corpora without a driver-side loop.
 
 Engineered properties (FIXTURES.md §1):
 - skewed hosts: ~30% of urls on one host, 15% on a second → exercises
-  salting before the dedup shuffle;
+  the url-keyed dedup shuffle under host skew;
 - duplicates: doc_id % 13 == 5 re-crawls the previous doc's url with a
   later warc_ts and a content variant → exercises max_by(warc_ts) dedup;
 - ~7% PDF-branch payloads (GRAFT-BLOCKS stand-in, see

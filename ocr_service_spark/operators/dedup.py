@@ -1,21 +1,23 @@
 """Deduplication operators.
 
 1. `dedup_latest` — the north-rule "dedup-and-validate" shuffle: one
-   row per url keeping max warc_ts, with EXPLICIT two-phase salting for
-   skewed hosts (a few hosts own most pages — FIXTURES.md §1). The
-   reference has no analog (it never sees two crawls of one document);
-   the semantics come from the north rule's
-   "salts skewed hosts before the dedup-and-validate shuffle".
+   row per url keeping max warc_ts. The reference has no analog (it
+   never sees two crawls of one document).
 
    Determinism: the keeper is max over struct(warc_ts, doc_id, ...) —
    lexicographic struct ordering with a total-order prefix, so ties
    can't flip between runs/parallelism levels (SURVEY.md §7).
 
-   Scale note: phase 1 (url, salt) aggregation is a map-side-combinable
-   hash agg that splits each hot url across `n_salts` reducers; phase 2
-   re-aggregates the tiny survivor set. At 10^12 rows this bounds any
-   single reducer to ~rows(url)/n_salts. AQE skew handling only fixes
-   joins, not aggregations — hence manual salt.
+   Physical plan: SortAggregate(partial) → ONE url Exchange →
+   SortAggregate(final). A struct holding string/binary cannot be
+   hash-aggregated, so each side sorts its rows by url.
+
+   Skew: the key is the url, so a hot host (FIXTURES.md §1) spreads
+   over many reducers; the only hot key is a url crawled many times.
+   The partial aggregate emits at most one record per url per map
+   task, so such a url sends at most (map tasks) records to its
+   reducer however many crawls it has. That bound is the skew
+   handling; no salt is needed (FP-Hadoop, VLDB 2015).
 
 2. Exact + near-duplicate *content* dedup (training-data tier):
    `exact_text_dedup`, plus MinHash/SimHash/Jaccard live in
@@ -38,21 +40,17 @@ def dedup_latest(
 ) -> DataFrame:
     """Keep, per `key`, the row with the greatest (order_cols) tuple.
 
-    Implemented as salted two-phase max-of-struct aggregation (no
-    window, no sort): payload columns ride inside the struct so the
-    shuffle carries exactly one combined record per (key, salt) out of
-    the map side.
+    One max-of-struct aggregation: payload columns ride inside the
+    struct, so each map task shuffles at most one record per key and
+    the plan has exactly one `key` Exchange (pinned by
+    tests/test_operators_tiers.py). Output columns: key, order_cols,
+    then the remaining payload columns.
     """
+    # n_salts is unused; it stays only because perfbench/layers.py passes it.
     payload = [c for c in df.columns if c != key]
     ordered = [*order_cols, *[c for c in payload if c not in order_cols]]
-    packed = df.select(
-        F.col(key),
-        F.pmod(F.xxhash64(*[F.col(c) for c in ordered[:2]]), F.lit(n_salts)).alias("_salt"),
-        F.struct(*[F.col(c) for c in ordered]).alias("_rec"),
-    )
-    partial = packed.groupBy(key, "_salt").agg(F.max("_rec").alias("_rec"))
-    final = partial.groupBy(key).agg(F.max("_rec").alias("_rec"))
-    return final.select(F.col(key), *[F.col(f"_rec.{c}").alias(c) for c in ordered])
+    kept = df.groupBy(key).agg(F.max(F.struct(*ordered)).alias("_rec"))
+    return kept.select(F.col(key), *[F.col(f"_rec.{c}").alias(c) for c in ordered])
 
 
 def drop_hot_shingles(

@@ -21,6 +21,11 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_service_spark.operators.correct import (
+    CORRECT_RESULT_TYPE,
+    DEFAULT_CORRECTIONS,
+)
+
 SPAN_TYPE = T.ArrayType(
     T.StructType(
         [
@@ -44,109 +49,26 @@ EXTRACT_RESULT_TYPE = T.StructType(
     ]
 )
 
-
-def make_extract_udf(separator: str = "\n\n"):
-    """Build the extraction UDF with a fixed block separator.
-
-    separator='\\n\\n' is the production default; the round-trip
-    correctness query uses ' ' so a plain-SQL oracle can reproduce the
-    expected output (see __spark_entry__.py).
-    """
-
-    @F.pandas_udf(EXTRACT_RESULT_TYPE)
-    def extract(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        # import inside the UDF: runs on executors after --py-files ship
-        from ocr_service_spark.kernel.dispatch import extract_document
-
-        for payloads in batches:
-            texts, spans, kinds, n_nodes, n_content, charsets, errors = (
-                [], [], [], [], [], [], [])
-            for raw in payloads:
-                r = extract_document(bytes(raw) if raw is not None else None,
-                                     separator=separator)
-                texts.append(r.text)
-                spans.append(
-                    [
-                        {"start": s, "end": e, "node_idx": ni, "confidence": c}
-                        for (s, e, ni, c) in r.spans
-                    ]
-                )
-                kinds.append(r.kind)
-                n_nodes.append(r.n_nodes)
-                n_content.append(r.n_content)
-                charsets.append(r.charset)
-                errors.append(r.error)
-            yield pd.DataFrame(
-                {
-                    "text": texts,
-                    "spans": spans,
-                    "kind": kinds,
-                    "n_nodes": pd.array(n_nodes, dtype="int32"),
-                    "n_content": pd.array(n_content, dtype="int32"),
-                    "charset": charsets,
-                    "error": errors,
-                }
-            )
-
-    # The kernel IS deterministic, but Catalyst treats deterministic
-    # UDFs as free to duplicate: a filter on a UDF-derived column (the
-    # error-skip predicate) gets pushed below the projection and the
-    # plan grows a SECOND ArrowEvalPython node — the whole corpus would
-    # be extracted twice. asNondeterministic() pins exactly one
-    # evaluation per row (verified by tests/test_pipeline_spark.py's
-    # single-node plan assertion).
-    return extract.asNondeterministic()
+EXTRACT_CORRECT_RESULT_TYPE = T.StructType(
+    EXTRACT_RESULT_TYPE.fields + CORRECT_RESULT_TYPE.fields)
 
 
-def with_extraction(df, html_col: str = "html", out_col: str = "extraction",
-                    separator: str = "\n\n"):
-    """df + one struct column with the extraction result. Single
-    projection — Catalyst keeps it in the same stage as the scan, so
-    the whole extract path is scan→ArrowEvalPython→project with no
-    shuffle."""
-    udf = make_extract_udf(separator=separator)
-    return df.withColumn(out_col, udf(F.col(html_col)))
-
-
-def make_extract_correct_udf(separator: str = "\n\n",
-                             corrections: dict[str, str] | None = None):
-    """Fused extraction + autocorrection UDF: one Arrow round-trip for
-    the whole Python hot path. The unfused pair (extract UDF → filter →
-    correct UDF) ships the extracted text back to the JVM only to ship
-    it straight into the next Python worker — at 10^12 docs that second
-    round-trip is pure Arrow serialization tax. The fused kernel runs
-    correction inline on each extraction while the text is still a hot
-    Python object (error rows pass through with corrected_text=None),
-    so the plan carries exactly ONE ArrowEvalPython node.
-
-    Composability is unchanged: with_extraction / with_corrections stay
-    the standalone operators; process_documents uses this fusion.
-    """
-    from ocr_service_spark.operators.correct import (
-        CORRECTION_TYPE,
-        DEFAULT_CORRECTIONS,
-    )
-
-    cmap = dict(DEFAULT_CORRECTIONS if corrections is None else corrections)
-    result_type = T.StructType(
-        list(EXTRACT_RESULT_TYPE.fields)
-        + [
-            T.StructField("corrected_text", T.StringType()),
-            T.StructField("corrections", T.ArrayType(CORRECTION_TYPE)),
-        ]
-    )
+def _kernel_udf(separator: str, correct: bool):
+    """The one Arrow batch loop behind both extraction UDFs: run the
+    kernel on every payload and, when `correct`, autocorrect the text
+    while it is still a hot Python object (error rows pass through with
+    corrected_text=None)."""
+    result_type = EXTRACT_CORRECT_RESULT_TYPE if correct else EXTRACT_RESULT_TYPE
+    cmap = dict(DEFAULT_CORRECTIONS)
 
     @F.pandas_udf(result_type)
-    def extract_correct(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        # import inside the UDF: runs on executors after --py-files ship
         from ocr_service_spark.kernel.correct import correct_document
         from ocr_service_spark.kernel.dispatch import extract_document
 
         for payloads in batches:
-            cols: dict[str, list] = {
-                "text": [], "spans": [], "kind": [], "n_nodes": [],
-                "n_content": [], "charset": [], "error": [],
-                "corrected_text": [], "corrections": [],
-            }
+            cols: dict[str, list] = {f.name: [] for f in result_type.fields}
             for raw in payloads:
                 r = extract_document(bytes(raw) if raw is not None else None,
                                      separator=separator)
@@ -159,6 +81,8 @@ def make_extract_correct_udf(separator: str = "\n\n",
                 cols["n_content"].append(r.n_content)
                 cols["charset"].append(r.charset)
                 cols["error"].append(r.error)
+                if not correct:
+                    continue
                 if r.text is None:
                     cols["corrected_text"].append(None)
                     cols["corrections"].append([])
@@ -173,4 +97,45 @@ def make_extract_correct_udf(separator: str = "\n\n",
             cols["n_content"] = pd.array(cols["n_content"], dtype="int32")
             yield pd.DataFrame(cols)
 
-    return extract_correct.asNondeterministic()
+    # The kernel IS deterministic, but Catalyst treats deterministic
+    # UDFs as free to duplicate: a filter on a UDF-derived column (the
+    # error-skip predicate) gets pushed below the projection and the
+    # plan grows a SECOND ArrowEvalPython node — the whole corpus would
+    # be extracted twice. asNondeterministic() pins exactly one
+    # evaluation per row (verified by tests/test_pipeline_spark.py's
+    # single-node plan assertion).
+    return run.asNondeterministic()
+
+
+def make_extract_udf(separator: str = "\n\n"):
+    """Build the extraction UDF with a fixed block separator.
+
+    separator='\\n\\n' is the production default; the round-trip
+    correctness query uses ' ' so a plain-SQL oracle can reproduce the
+    expected output (see __spark_entry__.py).
+    """
+    return _kernel_udf(separator, correct=False)
+
+
+def with_extraction(df, html_col: str = "html", out_col: str = "extraction",
+                    separator: str = "\n\n"):
+    """df + one struct column with the extraction result. Single
+    projection — Catalyst keeps it in the same stage as the scan, so
+    the whole extract path is scan→ArrowEvalPython→project with no
+    shuffle."""
+    udf = make_extract_udf(separator=separator)
+    return df.withColumn(out_col, udf(F.col(html_col)))
+
+
+def make_extract_correct_udf():
+    """Fused extraction + autocorrection UDF: one Arrow round-trip for
+    the whole Python hot path. The unfused pair (extract UDF → filter →
+    correct UDF) ships the extracted text back to the JVM only to ship
+    it straight into the next Python worker — at 10^12 docs that second
+    round-trip is pure Arrow serialization tax. The plan carries exactly
+    ONE ArrowEvalPython node; correction uses DEFAULT_CORRECTIONS.
+
+    Composability is unchanged: with_extraction / with_corrections stay
+    the standalone operators; process_documents uses this fusion.
+    """
+    return _kernel_udf("\n\n", correct=True)

@@ -5,7 +5,7 @@ Spark restatement of the reference's `POST /api/v1/process` lifecycle
 DataFrame chain —
 
   scan(documents)
-    → dedup-and-validate shuffle (salted, keep latest warc_ts crawl)
+    → dedup-and-validate shuffle (keep the latest warc_ts crawl per url)
     → FUSED extraction + correction UDF (one Arrow batch round-trip;
       HTML density classify / PDF block merge + contextual digit fix +
       dictionary token map — replaces stages 2-5 of the reference
@@ -14,10 +14,11 @@ DataFrame chain —
     → quality + needs_review (stages 8, P2/P3)
     → final projection (stage 11, processor.py:346-376)
 
-Catalyst plans this as: one scan stage into the salted partial-dedup
-shuffle, one post-shuffle stage carrying the single ArrowEvalPython
-node plus every native expr — vs the reference's fully serial per-file
-loop (processor.py:415-417).
+Catalyst plans this as: one scan stage ending in the partial dedup
+aggregate, ONE url Exchange, and one post-shuffle stage carrying the
+final dedup aggregate, the single ArrowEvalPython node and every native
+expr — vs the reference's fully serial per-file loop
+(processor.py:415-417).
 
 Deterministic document id (F14): reference uses uuid4
 (processor.py:111) which breaks idempotent restart; we derive
@@ -47,43 +48,32 @@ from ocr_service_spark.operators.validate import (
 __all__ = ["extract_documents", "process_documents"]
 
 
-def extract_documents(docs: DataFrame, separator: str = "\n\n") -> DataFrame:
+def _extraction_columns() -> list:
+    """The 11 flat result columns of extraction struct `x`."""
+    return ["doc_id", "url", "warc_ts", "lang",
+            F.col("x.text").alias("extracted_text"),
+            *[F.col(f"x.{c}").alias(c) for c in
+              ("spans", "kind", "n_nodes", "n_content", "charset", "error")]]
+
+
+def extract_documents(docs: DataFrame) -> DataFrame:
     """Scan → extraction UDF → flat result columns. Keeps error rows
     (error != null) so callers can union/report them — the analog of
     the reference's error result rows (processor.py:431-438)."""
-    out = with_extraction(docs, "html", "x", separator=separator)
-    return out.select(
-        "doc_id",
-        "url",
-        "warc_ts",
-        "lang",
-        F.col("x.text").alias("extracted_text"),
-        F.col("x.spans").alias("spans"),
-        F.col("x.kind").alias("kind"),
-        F.col("x.n_nodes").alias("n_nodes"),
-        F.col("x.n_content").alias("n_content"),
-        F.col("x.charset").alias("charset"),
-        F.col("x.error").alias("error"),
-    )
+    return with_extraction(docs, "html", "x").select(*_extraction_columns())
 
 
-def process_documents(
-    docs: DataFrame,
-    field_names: list[str] | None = None,
-    n_salts: int = 16,
-    dedup: bool = True,
-) -> DataFrame:
+def process_documents(docs: DataFrame) -> DataFrame:
     """Full result-record pipeline (P1 final projection)."""
-    names = field_names or list(FIELD_EXPRS)
+    names = list(FIELD_EXPRS)
     # Dedup FIRST, on the raw crawl rows: the expensive extraction UDF
-    # never runs for rows that lose the keep-latest race. At 10^12 rows
-    # this also means the html payload crosses the wire exactly once
-    # (salted two-phase max-of-struct), and extraction executes
+    # never runs for rows that lose the keep-latest race, and the
+    # partial aggregate ships at most one html payload per url per map
+    # task through the single url Exchange. Extraction executes
     # pipelined in the post-shuffle stage. With an Iceberg table
-    # bucketed by url-hash the exchange disappears entirely.
-    if dedup:
-        docs = dedup_latest(docs, key="url", order_cols=("warc_ts", "doc_id"),
-                            n_salts=n_salts)
+    # bucketed by url-hash the exchange disappears entirely
+    # (tests/test_bucketed_dedup.py).
+    docs = dedup_latest(docs, key="url", order_cols=("warc_ts", "doc_id"))
     # Fused extraction + stage-5 autocorrect (processor.py:253) in ONE
     # Arrow round-trip: the unfused extract→correct pair would ship the
     # extracted text JVM→Python→JVM→Python; the fusion corrects while
@@ -92,17 +82,7 @@ def process_documents(
     fused = make_extract_correct_udf()
     x = docs.withColumn("x", fused(F.col("html")))
     ok = x.filter(F.col("x.error").isNull()).select(
-        "doc_id",
-        "url",
-        "warc_ts",
-        "lang",
-        F.col("x.text").alias("extracted_text"),
-        F.col("x.spans").alias("spans"),
-        F.col("x.kind").alias("kind"),
-        F.col("x.n_nodes").alias("n_nodes"),
-        F.col("x.n_content").alias("n_content"),
-        F.col("x.charset").alias("charset"),
-        F.col("x.error").alias("error"),
+        *_extraction_columns(),
         F.col("x.corrected_text").alias("corrected_text"),
         F.col("x.corrections").alias("corrections_applied"),
     )

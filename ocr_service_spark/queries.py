@@ -13,8 +13,9 @@ name, rows order-insensitive):
 - aliases match exactly between the Spark plan and the oracle SQL.
 
 Scale notes ride on each query: the same plan is what we'd run at
-10^12 rows — broadcast hints on dimension tables, salted two-phase
-aggregation for skewed keys, map-side-combinable aggs, no collect().
+10^12 rows — broadcast hints on dimension tables, partial aggregation
+that bounds a skewed key's reducer input, map-side-combinable aggs, no
+collect().
 """
 
 from __future__ import annotations
@@ -512,12 +513,12 @@ def anti_semi_customers(spark, sf_dir):
 )
 def dedup_latest_events(spark, sf_dir):
     """The north-rule dedup-and-validate shuffle: keep the latest row
-    per key via SALTED two-phase max-of-struct aggregation (no window,
-    no sort — operators/dedup.py). At 10^12 rows a hot key is split
-    across n_salts reducers in phase 1; phase 2 touches one row per
-    (key, salt)."""
+    per key via one max-of-struct aggregation (operators/dedup.py; no
+    window). Plan: partial SortAggregate → one user_id Exchange → final
+    SortAggregate. The partial aggregate bounds a hot key's reducer
+    input to one row per map task."""
     e = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type")
-    d = dedup_latest(e, key="user_id", order_cols=("ts", "event_id"), n_salts=8)
+    d = dedup_latest(e, key="user_id", order_cols=("ts", "event_id"))
     return d.select(
         "user_id",
         "event_id",
@@ -3641,10 +3642,9 @@ def error_spikes(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Skew-observability + search tier (north_rule: "salts skewed hosts
-# before the dedup-and-validate shuffle" — host_stats is the detector
-# that feeds pipeline.py's n_salts; tfidf_keywords adds inverted-index
-# style term scoring; price_histogram a fixed-bin distribution sketch)
+# Skew-observability + search tier (host_stats reports the skewed-host
+# shape; tfidf_keywords adds inverted-index style term scoring;
+# price_histogram a fixed-bin distribution sketch)
 # ---------------------------------------------------------------------------
 
 # Deterministic skewed host synthesis shared by the Spark and DuckDB
@@ -3679,9 +3679,10 @@ _HOST_SQL = (
 )
 def host_stats(spark, sf_dir):
     """Heavy-hitter host detection — the observability half of the
-    north rule's "salt skewed hosts" requirement (pipeline.py picks
-    n_salts from exactly this shape; reference analog: per-source batch
-    stats, scripts/process_certificates_all_phases.py:319-355). One
+    north rule's "salt skewed hosts" requirement: it reports the host
+    skew, which the url-keyed dedup needs no salt for (operators/dedup.py;
+    reference analog: per-source batch stats,
+    scripts/process_certificates_all_phases.py:319-355). One
     map-side-combinable count/sum agg keyed by host plus a broadcast
     1-row total; the heavy verdict is integer-exact (n*20 >= total, no
     float threshold). At 10^12 rows the host-keyed agg is the only

@@ -11,11 +11,12 @@ from __future__ import annotations
 import importlib.util
 import json
 import sys
+from pathlib import Path
 
 
 def _load_bench(tmp_path, floors_content=None, seed_content=None):
-    spec = importlib.util.spec_from_file_location("bench_mod",
-                                                  "/root/repo/bench.py")
+    spec = importlib.util.spec_from_file_location(
+        "bench_mod", Path(__file__).resolve().parents[1] / "bench.py")
     mod = importlib.util.module_from_spec(spec)
     sys.modules["bench_mod"] = mod
     spec.loader.exec_module(mod)

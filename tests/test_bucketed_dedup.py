@@ -8,6 +8,8 @@ satisfies the aggregation's distribution requirement)."""
 
 import pyspark.sql.functions as F
 
+from ocr_service_spark.operators.dedup import dedup_latest
+
 
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
@@ -26,13 +28,9 @@ def test_bucketed_scan_eliminates_dedup_exchange(spark, tmp_path):
      .option("path", str(tmp_path / "bucketed_docs"))
      .saveAsTable("bucketed_docs"))
 
-    def keep_latest(df):
-        return (df.groupBy("url")
-                .agg(F.max(F.struct("warc_ts", "payload")).alias("r"))
-                .select("url", "r.warc_ts", "r.payload"))
-
-    flat = keep_latest(docs)
-    bucketed = keep_latest(spark.table("bucketed_docs"))
+    flat = dedup_latest(docs, key="url", order_cols=("warc_ts",))
+    bucketed = dedup_latest(spark.table("bucketed_docs"), key="url",
+                            order_cols=("warc_ts",))
 
     flat_plan, bucketed_plan = _plan(flat), _plan(bucketed)
     assert "Exchange" in flat_plan, "unbucketed dedup must shuffle"

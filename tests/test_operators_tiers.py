@@ -1,6 +1,6 @@
 """Unit tests for the training-data operator tiers: text stats,
 fingerprints, minhash/simhash, embedding similarity, multimodal
-plumbing, salted dedup determinism."""
+plumbing, latest-crawl dedup under a hot url."""
 
 import pyspark.sql.functions as F
 
@@ -123,16 +123,43 @@ def test_multimodal_meta_matches_stub(spark):
     assert out[3].n_bytes == 0
 
 
-def test_dedup_latest_salt_invariance(spark):
-    rows = [(f"u{i % 7}", i, f"p{i}") for i in range(100)]
-    df = spark.createDataFrame(rows, "url string, ts long, payload string")
-    a = {(r.url, r.ts) for r in
-         dedup_latest(df, key="url", order_cols=("ts",), n_salts=1).collect()}
-    b = {(r.url, r.ts) for r in
-         dedup_latest(df, key="url", order_cols=("ts",), n_salts=13).collect()}
-    assert a == b
-    assert len(a) == 7
-    assert all(ts >= 93 for _, ts in a)
+def test_dedup_latest_hot_url_one_exchange(spark):
+    """10^4 crawls of one hot url plus 10 cold urls over 4 input
+    partitions. The keeper is the max (warc_ts, doc_id) row with its own
+    payload; the plan has exactly one url Exchange; and the partial
+    aggregate ships at most one record per url per map task, however
+    many crawls the hot url has."""
+    import hashlib
+
+    from perfbench.probe import executed_nodes, metric_sum, nodes_named
+
+    n_parts, n_cold, n_rows = 4, 10, 10_500
+    hot, cold = "https://hot.example/", "https://cold.example/"
+    docs = spark.range(n_rows, numPartitions=n_parts).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") % 21 < 20, F.lit(hot))
+        .otherwise(F.concat(F.lit(cold), (F.col("id") % n_cold).cast("string")))
+        .alias("url"),
+        (F.col("id") % 97).alias("warc_ts"),  # many ties: doc_id decides
+        F.sha2(F.col("id").cast("string"), 256).alias("html"),
+    )
+    keeper: dict[str, tuple[int, int]] = {}
+    for i in range(n_rows):
+        url = hot if i % 21 < 20 else f"{cold}{i % n_cold}"
+        keeper[url] = max(keeper.get(url, (-1, -1)), (i % 97, i))
+
+    out = dedup_latest(docs, key="url", order_cols=("warc_ts", "doc_id"))
+    got = {r.url: r for r in out.collect()}
+    assert len(keeper) == n_cold + 1
+    assert {u: (r.warc_ts, r.doc_id) for u, r in got.items()} == keeper
+    assert all(r.html == hashlib.sha256(str(r.doc_id).encode()).hexdigest()
+               for r in got.values())
+
+    exchanges = nodes_named(executed_nodes(out), "ShuffleExchangeExec")
+    assert len(exchanges) == 1
+    assert exchanges[0]["partitioning"].startswith("hashpartitioning(url")
+    written = metric_sum(exchanges, "shuffleRecordsWritten")
+    assert written <= n_parts * len(keeper), written
 
 
 def test_ivf_topk_finds_planted_neighbor(spark):

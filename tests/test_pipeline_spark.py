@@ -57,7 +57,7 @@ def test_udfs_evaluated_exactly_once(spark, docs):
 
 
 def test_dedup_keeps_latest(spark, docs):
-    result = process_documents(docs, dedup=True)
+    result = process_documents(docs)
     rows = result.select("url", "warc_ts").collect()
     urls = [r.url for r in rows]
     assert len(urls) == len(set(urls)), "one row per url"
@@ -94,7 +94,7 @@ def test_dedup_latest_wins_even_if_it_errors(spark):
     ]
     df = spark.createDataFrame(
         rows, "doc_id long, url string, warc_ts timestamp, lang string, html binary")
-    assert process_documents(df, dedup=True).count() == 0, \
+    assert process_documents(df).count() == 0, \
         "errored keeper filtered; stale crawl must NOT resurface"
     from ocr_service_spark.operators.dedup import dedup_latest
 
@@ -133,7 +133,7 @@ def test_determinism_across_parallelism(spark, docs):
     def checksum(n_shuffle):
         spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
         try:
-            out = process_documents(docs, n_salts=7)
+            out = process_documents(docs)
             return (
                 out.select(
                     F.bit_xor(F.xxhash64("url", "extracted_text",

@@ -35,9 +35,9 @@ def test_chunk_dedup_no_cartesian(spark):
 
 
 def test_dedup_latest_has_no_window_or_global_sort(spark):
-    # salted two-phase max-of-struct: a Window or Sort here would mean
-    # the operator regressed to the rank-per-key shape that single-sorts
-    # every hot key's rows through one reducer
+    # one-phase max-of-struct (partial + final SortAggregate around one
+    # Exchange): a Window here would mean the operator regressed to the
+    # rank-per-key shape that sends every hot key's rows to one reducer
     plan = _plan(spark, "dedup_latest_events")
     assert "Window" not in plan
     assert "TakeOrderedAndProject" not in plan

@@ -13,10 +13,12 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, CHECKOUT)
 
 
 def canonical_type(t) -> str:

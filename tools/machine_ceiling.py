@@ -19,9 +19,12 @@ Prints one JSON line.
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 import time
+
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 BUSY = (
     "import time\nt0=time.time()\nx=0\n"
@@ -30,7 +33,7 @@ BUSY = (
 
 KERNEL = r'''
 import sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from ocr_service_spark.corpus import gen_docs
 from ocr_service_spark.kernel.dispatch import extract_document
 from ocr_service_spark.kernel.correct import contextual_digit_fix, apply_corrections_map
@@ -47,7 +50,8 @@ print(n)
 
 
 def run(code: str, nproc: int) -> int:
-    ps = [subprocess.Popen([sys.executable, "-c", code],
+    # argv[1] is the checkout the kernel workload imports from
+    ps = [subprocess.Popen([sys.executable, "-c", code, CHECKOUT],
                            stdout=subprocess.PIPE) for _ in range(nproc)]
     return sum(int(p.communicate()[0]) for p in ps)
 
