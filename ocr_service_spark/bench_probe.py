@@ -1,5 +1,5 @@
-"""Measurement probes for the scaling benchmark: load-gating, CPU
-accounting, and per-stage Spark metrics.
+"""Measurement probes for the benchmarks: load-gating and CPU
+accounting.
 
 The sandbox host has external load bursts (loadavg 15+ with zero local
 processes) that inflate wall-clock 5-20x. Scaling-efficiency claims
@@ -15,17 +15,14 @@ few percent — see tools/scaling_job.py).
 
 from __future__ import annotations
 
-import json
 import os
 import time
-import urllib.request
 
 __all__ = [
     "loadavg1",
     "wait_for_quiet",
     "host_cpu_seconds",
     "session_tree_cpu_seconds",
-    "stage_metrics",
 ]
 
 _CLK_TCK = os.sysconf("SC_CLK_TCK")
@@ -36,19 +33,20 @@ def loadavg1() -> float:
         return float(f.read().split()[0])
 
 
-def wait_for_quiet(gate: float | None = None, max_wait_s: int | None = None,
-                   poll_s: float = 5.0) -> float:
-    """Block until 1-min loadavg < gate (or max wait elapses); returns
-    seconds waited. Gate default $SPARK_GRAFT_LOAD_GATE (4.0): our own
-    idle JVM contributes ~0, so load above that is the neighbours."""
-    if gate is None:
-        gate = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "4.0"))
-    if max_wait_s is None:
-        max_wait_s = int(os.environ.get("SPARK_GRAFT_LOAD_GATE_MAX_WAIT", "180"))
-    t0 = time.time()
-    while loadavg1() >= gate and time.time() - t0 < max_wait_s:
-        time.sleep(poll_s)
-    return round(time.time() - t0, 1)
+def wait_for_quiet(max_wait_s: float = 180.0,
+                   poll_s: float = 5.0) -> tuple[float, bool]:
+    """Block until the 1-min loadavg drops below a quarter of the
+    host's CPUs, or `max_wait_s` elapses. Returns (seconds waited,
+    timed out). Our own idle JVM contributes ~0, so load above the gate
+    is the neighbours or the tail of our own previous job."""
+    gate = os.cpu_count() / 4
+    t0 = time.monotonic()
+    while loadavg1() >= gate:
+        waited = time.monotonic() - t0
+        if waited >= max_wait_s:
+            return round(waited, 1), True
+        time.sleep(min(poll_s, max_wait_s - waited))
+    return round(time.monotonic() - t0, 1), False
 
 
 def host_cpu_seconds() -> float:
@@ -83,33 +81,3 @@ def session_tree_cpu_seconds() -> float:
         if len(fields) > 12 and int(fields[3]) == sid:
             total += int(fields[11]) + int(fields[12])
     return total / _CLK_TCK
-
-
-def stage_metrics(spark, ui_port: int, seen: set[int]) -> tuple[list[dict], set[int]]:
-    """Completed-stage metrics NEW since `seen`, via the UI REST API:
-    per-stage wall-ish executorRunTime (sum of task durations, ms) and
-    JVM executorCpuTime (ms). Python UDF time shows up in runTime (the
-    task blocks on the worker), not cpuTime — whole-tree Python CPU is
-    covered by session_tree_cpu_seconds instead."""
-    app_id = spark.sparkContext.applicationId
-    url = f"http://localhost:{ui_port}/api/v1/applications/{app_id}/stages?status=complete"
-    try:
-        stages = json.load(urllib.request.urlopen(url, timeout=10))
-    except Exception:
-        return [], seen
-    out = []
-    new_seen = set(seen)
-    for s in stages:
-        key = s["stageId"] * 1000 + s.get("attemptId", 0)
-        if key in new_seen:
-            continue
-        new_seen.add(key)
-        out.append({
-            "stage": s["stageId"],
-            "name": s["name"].split(" at ")[0][:48],
-            "tasks": s["numCompleteTasks"],
-            "run_ms": s["executorRunTime"],
-            "jvm_cpu_ms": round(s["executorCpuTime"] / 1e6),
-        })
-    out.sort(key=lambda x: -x["run_ms"])
-    return out, new_seen

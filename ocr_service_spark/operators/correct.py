@@ -61,11 +61,11 @@ def with_corrections(
     df: DataFrame,
     text_col: str = "extracted_text",
     out_col: str = "correction",
-    corrections: dict[str, str] | None = None,
 ) -> DataFrame:
-    """df + struct(corrected_text, corrections). Null text passes
-    through as null with an empty corrections array."""
-    cmap = dict(DEFAULT_CORRECTIONS if corrections is None else corrections)
+    """df + struct(corrected_text, corrections) under
+    DEFAULT_CORRECTIONS. Null text passes through as null with an empty
+    corrections array."""
+    cmap = dict(DEFAULT_CORRECTIONS)
 
     @F.pandas_udf(CORRECT_RESULT_TYPE)
     def correct(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:

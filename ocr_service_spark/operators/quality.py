@@ -8,7 +8,7 @@ Graft mapping of the reference's image-quality metrics
   brightness  → length adequacy (chars vs a 200-char target)
 Weighted mix 0.3/0.5/0.2 with clamp to [0,1] replicates
 services/quality_check.py:193-199; the review predicate
-(overall < 0.7 OR issues present) replicates quality_check.py:222 and
+(overall < 0.7 OR any field invalid) replicates quality_check.py:222 and
 processor.py:373-374.
 """
 
@@ -18,6 +18,8 @@ import pandas as pd
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ocr_service_spark.operators.validate import FIELD_EXPRS
 
 __all__ = ["text_quality", "overall_quality", "needs_review", "compression_ratio"]
 
@@ -57,18 +59,14 @@ def overall_quality(alpha_ratio: Column, extraction_conf: Column,
     )
 
 
-def needs_review(quality: Column, n_issues: Column,
-                 fields: Column | None = None,
-                 field_names: list[str] | None = None) -> Column:
+def needs_review(quality: Column, fields: Column) -> Column:
     """P3 (quality_check.py:222) OR'd with P2's any-invalid-field
-    (processor.py:373-374) when a fields struct + its names are given."""
-    base = (quality < 0.7) | (n_issues > 0)
-    if fields is not None and field_names:
-        any_invalid = F.exists(
-            F.array(*[fields[n]["valid"] for n in field_names]), lambda v: ~v
-        )
-        return base | any_invalid
-    return base
+    (processor.py:373-374) over every field of a validated_fields
+    struct."""
+    any_invalid = F.exists(
+        F.array(*[fields[n]["valid"] for n in FIELD_EXPRS]), lambda v: ~v
+    )
+    return (quality < 0.7) | any_invalid
 
 
 def compression_ratio(text: Column) -> Column:

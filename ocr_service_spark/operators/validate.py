@@ -12,9 +12,11 @@ Per field (reference core/validators.py:25-76):
 
 Regex dialect note: Spark uses Java regex. The reference's Python
 patterns port verbatim for the digit fields (\\b is ASCII-word-bounded
-in both); the Cyrillic surname lookaheads also work in Java regex. For
-byte-parity-critical paths the same rules run inside the kernel oracle
-(kernel/fields.py) and pytest asserts agreement.
+in both); the Cyrillic surname lookaheads also work in Java regex. The
+rules are checked against an independent restatement: the DuckDB SQL
+oracle of the `field_validation` query (queries.ORACLE_SQL) recomputes
+every field's value, validity and confidence, and
+tools/check_correctness.py compares the two value-for-value.
 """
 
 from __future__ import annotations
@@ -79,11 +81,11 @@ def field_struct(text: Column, name: str) -> Column:
     )
 
 
-def validated_fields(text: Column, fields: list[str] | None = None) -> Column:
-    """critical_fields as a fixed struct-of-structs (preferred over map,
-    SURVEY.md §1.1: schema is static)."""
-    names = fields or list(FIELD_EXPRS)
-    return F.struct(*[field_struct(text, n).alias(n) for n in names])
+def validated_fields(text: Column) -> Column:
+    """critical_fields as a fixed struct-of-structs, one field per
+    FIELD_EXPRS entry (preferred over map, SURVEY.md §1.1: schema is
+    static)."""
+    return F.struct(*[field_struct(text, n).alias(n) for n in FIELD_EXPRS])
 
 
 def important_data(text: Column) -> Column:

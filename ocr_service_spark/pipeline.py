@@ -39,11 +39,7 @@ from ocr_service_spark.operators.quality import (
     overall_quality,
     text_quality,
 )
-from ocr_service_spark.operators.validate import (
-    FIELD_EXPRS,
-    important_data,
-    validated_fields,
-)
+from ocr_service_spark.operators.validate import important_data, validated_fields
 
 __all__ = ["extract_documents", "process_documents"]
 
@@ -65,7 +61,6 @@ def extract_documents(docs: DataFrame) -> DataFrame:
 
 def process_documents(docs: DataFrame) -> DataFrame:
     """Full result-record pipeline (P1 final projection)."""
-    names = list(FIELD_EXPRS)
     # Dedup FIRST, on the raw crawl rows: the expensive extraction UDF
     # never runs for rows that lose the keep-latest race, and the
     # partial aggregate ships at most one html payload per url per map
@@ -116,16 +111,11 @@ def process_documents(docs: DataFrame) -> DataFrame:
                 F.col("quality_stats.length_score"),
             ),
         )
-        .withColumn("critical_fields", validated_fields(txt, names))
+        .withColumn("critical_fields", validated_fields(txt))
         .withColumn("important_data", important_data(txt))
         .withColumn(
             "needs_review",
-            needs_review(
-                F.col("overall_quality"),
-                F.when(F.col("error").isNotNull(), 1).otherwise(0),
-                F.col("critical_fields"),
-                names,
-            ),
+            needs_review(F.col("overall_quality"), F.col("critical_fields")),
         )
     )
     # final projection — reference processor.py:346-376

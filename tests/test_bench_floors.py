@@ -1,7 +1,9 @@
 """bench.py floor-file keying (ADVICE r4): floors are provenance for
 the adaptive noise retry, and they must be scoped to the exact bench
 config — one run at a smaller scale must neither ratchet the default
-config's floors down (min) nor be judged suspect against them.
+config's floors down (min) nor be judged suspect against them. Also
+the quiet gate in front of timed attempts: its waits share one budget
+and each one is stamped in the noise audit.
 
 Pure-Python: no Spark session involved.
 """
@@ -9,7 +11,9 @@ Pure-Python: no Spark session involved.
 from __future__ import annotations
 
 import importlib.util
+import itertools
 import json
+import os
 import sys
 from pathlib import Path
 
@@ -82,3 +86,55 @@ def test_headline_line_is_driver_parseable():
         assert key in d, key
     assert d["metric"] == "headline_total"
     assert d["queries"] == timings
+
+
+class _FakeClock:
+    """Stands in for bench_probe's `time`: sleep advances a virtual clock."""
+
+    def __init__(self):
+        self.now = 0.0
+
+    def monotonic(self):
+        return self.now
+
+    def sleep(self, s):
+        self.now += s
+
+
+def _gated_best_of(tmp_path, monkeypatch, loads):
+    from ocr_service_spark import bench_probe
+
+    b = _load_bench(tmp_path)
+    clock = _FakeClock()
+    monkeypatch.setattr(bench_probe, "time", clock)
+    monkeypatch.setattr(bench_probe, "loadavg1", lambda: next(loads))
+    gate = b.QuietGate(budget_s=60.0)
+    # a floor no attempt can meet: every base rep is followed by retries
+    _, n, entry = b.best_of(lambda: 7, 1e-9, gate, reps=2,
+                            gate_first=True, max_attempts=4)
+    return gate, clock, n, entry
+
+
+def test_quiet_gate_stamps_waits_and_timeouts_in_one_budget(tmp_path, monkeypatch):
+    busy = itertools.repeat(10.0 * os.cpu_count())
+    gate, clock, n, entry = _gated_best_of(tmp_path, monkeypatch, busy)
+    a = entry["attempts"]
+    assert n == 7 and len(a) == 4 and entry["suspect"]
+    # the first timed attempt and every retry are gated; base rep 2 is not
+    assert "gate_wait_s" not in a[1]
+    gated = [a[0], a[2], a[3]]
+    assert [x["gate_timed_out"] for x in gated] == [True, True, True]
+    # the first wait spends the whole shared budget; later ones get nothing
+    assert [x["gate_wait_s"] for x in gated] == [60.0, 0.0, 0.0]
+    assert gate.left_s == 0.0 and clock.now == 60.0
+
+
+def test_quiet_gate_stops_waiting_once_the_host_is_quiet(tmp_path, monkeypatch):
+    # busy for three polls, then quiet for good
+    loads = itertools.chain([1e6] * 3, itertools.repeat(0.0))
+    gate, clock, n, entry = _gated_best_of(tmp_path, monkeypatch, loads)
+    a = entry["attempts"]
+    assert a[0]["gate_wait_s"] == 15.0 and not a[0]["gate_timed_out"]
+    assert [a[2]["gate_wait_s"], a[3]["gate_wait_s"]] == [0.0, 0.0]
+    assert not a[2]["gate_timed_out"] and not a[3]["gate_timed_out"]
+    assert gate.left_s == 45.0 and clock.now == 15.0

@@ -3,6 +3,8 @@ dedup semantics, plan hygiene (Arrow-only Python), determinism across
 parallelism (the north rule's two-cluster-size criterion, proxied by
 shuffle-partition variation)."""
 
+from datetime import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,7 +85,6 @@ def test_dedup_latest_wins_even_if_it_errors(spark):
     a latest-crawl-failed url therefore surfaces as an error row
     upstream of process_documents' error filter, not as a silent
     fallback to stale content."""
-    from datetime import datetime
 
     good_html = b"<html><body><article><p>" + b"good content here " * 20 + \
         b"</p></article></body></html>"
@@ -144,3 +145,25 @@ def test_determinism_across_parallelism(spark, docs):
             spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     assert checksum(2) == checksum(32)
+
+
+def test_needs_review_is_low_quality_or_invalid_field(spark, docs):
+    """P2/P3 row for row on the golden corpus: needs_review equals
+    overall_quality < 0.7 OR any critical field invalid. The golden
+    corpus never scores below 0.7, so one digit-heavy page with every
+    field valid is added to make the quality branch fire on its own."""
+    fields = ("ОГРН 1027700132195 ИНН 7707083893 КПП 773601001 от "
+              "01.02.2024 СНИЛС 112-233-445 95 тел +7 (495) 123-45-67 a@b.ru")
+    low = spark.createDataFrame(
+        [(10**6, "http://low.example/0", datetime(2025, 1, 1),
+          f"<html><body><p>{fields}</p></body></html>".encode(), None, "ru")],
+        docs.schema)
+    rows = process_documents(docs.unionByName(low)).select(
+        "url", "overall_quality", "critical_fields", "needs_review").collect()
+    low_q = {r.url for r in rows if r.overall_quality < 0.7}
+    invalid = {r.url for r in rows
+               if any(not f.valid for f in r.critical_fields)}
+    assert {r.url for r in rows if r.needs_review} == low_q | invalid
+    # each branch fires alone somewhere, and some rows pass review
+    assert low_q - invalid and invalid - low_q
+    assert len(low_q | invalid) < len(rows)

@@ -101,7 +101,7 @@ def main():
     from __spark_entry__ import oracle_sql, queries
     from ocr_service_spark.session import build_session
 
-    spark = build_session("check_correctness", cores=8, shuffle_partitions=8)
+    spark = build_session("check_correctness", shuffle_partitions=8)
 
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem events "
